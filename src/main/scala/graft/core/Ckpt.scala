@@ -47,6 +47,18 @@ import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
   * strictly after the last consumption. With no scope active, ckpt()
   * behaves exactly as before (GC + ContextCleaner lifecycle).
   *
+  * `eager = false` is NOT lazy under AQE. localCheckpoint takes the
+  * plan's RDD at the call, and an adaptive plan can only produce its RDD
+  * by running every upstream query stage (each shuffle map stage and
+  * broadcast) right there; only the final stage waits for the first
+  * action. A chain of "lazy" cuts therefore executes at the call site.
+  * Measured example: the former relational MMR greedy (six lazy cuts —
+  * pool, pairwise sims, four greedy rounds) ran 40 Spark jobs, ~2 s,
+  * while `llm_mmr_rerank_ann` was only being CONSTRUCTED (perfbench
+  * corpus trace, sf0.01, local[4]). Use `eager = false` to defer one
+  * final stage, not to defer work; a frame that outlives its query is
+  * cut eagerly whatever the caller asks (see [[retained]]).
+  *
   * Production cost when no scope is active and `recording` is false:
   * two thread-local reads. The captured plan is `executedPlan`, which
   * localCheckpoint plans anyway — recording adds no planning work.
@@ -107,7 +119,10 @@ object Ckpt {
 
   /** Checkpoints created inside `body` are EXEMPT from any enclosing
     * collection scope — for frames that outlive the query that built
-    * them (the SessionCache amortization pattern). */
+    * them (the SessionCache amortization pattern) — and are always cut
+    * EAGERLY: a lazy cut has already run its upstream stages (see above),
+    * so a frame left unread past its building query would hold
+    * broadcasts that the next [[Debris]] sweep removes. */
   def retained[A](body: => A): A = {
     val prev = retainFlag.get
     retainFlag.set(true)
@@ -125,7 +140,7 @@ object Ckpt {
           .getOrElse("unknown")
         buf.add(site -> ds.queryExecution.executedPlan)
       }
-      val out = ds.localCheckpoint(eager)
+      val out = ds.localCheckpoint(eager || retainFlag.get)
       val sc = scope.get()
       if (sc != null && !retainFlag.get) {
         // the checkpointed RDD lives in the returned Dataset's LogicalRDD

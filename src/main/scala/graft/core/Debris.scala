@@ -24,11 +24,14 @@ import org.apache.spark.sql.SparkSession
   * (localCheckpoint) — once materialized, consumers read the checkpoint
   * blocks (which this sweep never touches: it removes broadcast + shuffle
   * state only, never RDD blocks) and never re-read an earlier query's
-  * broadcast or shuffle output. A retained frame that is NOT yet
-  * materialized has created no broadcast yet (BroadcastExchange builds
-  * lazily at first execution), and its registered-but-never-run shuffles
-  * are re-registered by the DAGScheduler on stage creation after an
-  * unregister ([[graft.DebrisSpec]] pins both behaviors empirically).
+  * broadcast or shuffle output. Registered-but-never-run shuffles are
+  * re-registered by the DAGScheduler on stage creation after an
+  * unregister ([[graft.DebrisSpec]] pins this empirically). No retained
+  * frame is left unmaterialized: under AQE a lazy cut has already run
+  * its upstream stages (see [[Ckpt]]), so a sweep before its first read
+  * could remove a broadcast its final stage still needs — `Ckpt.retained`
+  * therefore always cuts eagerly (DebrisSpec builds the SessionCache
+  * queries, sweeps, then runs them).
   * Plain-value caches (fitted indexes, merge tables) hold no Spark
   * handles ([[SimSearch]] etc. collect to Scala values; the repo has no
   * raw `SparkContext.broadcast` call). Fresh queries re-plan from the

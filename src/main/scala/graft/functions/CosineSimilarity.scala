@@ -31,9 +31,21 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.CosineSimilarity.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** The kernel — shared by eval, generated code and `mmr_greedy`. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -45,29 +57,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $xi = (double) $a.getFloat($i);
-          double $yi = (double) $b.getFloat($i);
-          $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-        }
-        ${ev.value} = ($nx == 0.0 || $ny == 0.0)
-          ? 0.0 : $dot / java.lang.Math.sqrt($nx * $ny);
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Dot product twin (same design rationale). */
@@ -135,6 +124,8 @@ object GraftFunctions {
     "char_grams" -> (es => CharGrams(es.head, es(1))),
     // portable polynomial string hash as ONE compiled loop (PolyHash.scala)
     "poly_hash" -> (es => PolyHash(es.head)),
+    // per-query greedy MMR selection in one compiled call (MmrGreedy.scala)
+    "mmr_greedy" -> (es => MmrGreedy(es.head)),
     // BPE merge-rule sequence in one compiled pass (BpeMerges.scala);
     // trailing args are literal (l, r) pairs in application order
     "bpe_apply_merges" -> (es => BpeApplyMerges.fromArgs(es)),

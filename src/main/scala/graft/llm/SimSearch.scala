@@ -45,58 +45,28 @@ object SimSearch {
       col("embedding"), lit(nTables), lit(bitsPerTable), lit(dim)))
   }
 
-  /** Back-compat single-signature variant (table 0). */
-  def signature(df: DataFrame, nPlanes: Int = 12): DataFrame =
-    signatures(df, nTables = 1, bitsPerTable = nPlanes)
-      .withColumn("sig", expr("sigs[0]")).drop("sigs")
-
   /** A fitted IVF index: per-vector cell assignments + the (tiny, always
     * broadcast) centroid table. */
   case class IvfIndex(assigned: DataFrame, centroids: DataFrame, k: Int)
 
-  /** IVF coarse-quantizer fit: k-means cells over the corpus (fixed seed —
-    * reproducible across retries). Sizing at scale: k ≈ √N cells balances
-    * the two candidate-set terms (nProbe/k of the corpus scanned per query
-    * vs k centroid comparisons per query); the k = 16 default is sized for
-    * the ~√(N=500..50k) test fixtures, NOT for production — a 1B-vector
-    * corpus wants k ≈ 30k and a larger sample-based fit. The fit is an
-    * INDEX BUILD, not query work: amortized over every subsequent search,
-    * like any vector store's build/search split. */
-  def ivfFit(s: SparkSession, emb: DataFrame, k: Int,
-             seed: Long = 42L, maxIter: Int = 10): IvfIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val fv = emb.withColumn("fv", array_to_vector(col("embedding")))
-    val km = new KMeans().setK(k).setSeed(seed).setFeaturesCol("fv")
-      .setPredictionCol("cell").setMaxIter(maxIter)
-    val model = km.fit(fv)
-    val assigned = model.transform(fv)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat))
-    }.toSeq
-    IvfIndex(assigned, s.createDataFrame(centroids).toDF("cell", "centroid"), k)
-  }
-
   /** PORTABLE integer-exact IVF fit (r10): the llm_kmeans_iterate Lloyd
     * machinery ([[Semantic.kmeansFit]] — first-k seed, 6-decimal-rounded
     * cosine argmax assign, floor-1e-6-grid integer M-step) applied as the
-    * ANN coarse quantizer. Same plan shape as [[ivfFit]] (broadcast
-    * ≤k-row centroid state, one assign + one (cell, dim) aggregate per
-    * round), but every step is replayable verbatim in DuckDB — which is
-    * what gives llm_ann_ivf / llm_ann_pq real value twins instead of
-    * rows-only checks. The spark.ml [[ivfFit]] stays as the generic API
-    * (arbitrary k / maxIter, SimSearchSpec coverage). */
+    * ANN coarse quantizer (broadcast ≤k-row centroid state, one assign +
+    * one (cell, dim) aggregate per round). Every step is replayable
+    * verbatim in DuckDB — which is what gives llm_ann_ivf / llm_ann_pq
+    * real value twins instead of rows-only checks. Sizing at scale:
+    * k ≈ √N cells; the k = 16 default is sized for the test fixtures. */
   def ivfFitPortable(s: SparkSession, emb: DataFrame, k: Int = 16,
                      rounds: Int = 3): IvfIndex = {
     val (assigned, cents) = Semantic.kmeansFit(emb, k, rounds)
-    // cell ids are seed vec_ids (< k) — cast to INT to keep the public
-    // IvfIndex schema identical to the spark.ml fit's prediction column
+    // cell ids are seed vec_ids (< k) — cast to INT, the public
+    // IvfIndex cell type
     IvfIndex(
       emb.join(assigned.select(col("vec_id"), col("cell").cast("int").as("cell")),
           Seq("vec_id"))
         .select(col("vec_id"), col("embedding"), col("cell"))
-        .ckpt(eager = false),
+        .ckpt(), // eager: see Ckpt.retained
       cents.select(col("cell").cast("int").as("cell"),
         col("cvec").as("centroid")), k)
   }
@@ -142,57 +112,13 @@ object SimSearch {
       .filter(col("rn") <= topK)
   }
 
-  /** A fitted product-quantization index: per-vector code arrays + the
+  /** A fitted product-quantization index (the third ANN family next to
+    * hyperplane LSH and IVF): per-vector code arrays — m sub-vector codes,
+    * m=8 × ksub=16 → 8 nibbles ≈ 16× smaller than float32 — + the
     * (m × ksub rows, always-broadcast) sub-codebook table. `n` (corpus
     * size at fit) sizes the default exact-re-rank pool at search time. */
   case class PqIndex(codes: DataFrame, codebooks: DataFrame,
                      m: Int, dsub: Int, ksub: Int, n: Long)
-
-  /** Product-quantization fit (the third ANN family next to hyperplane
-    * LSH and IVF): the embedding splits into m sub-vectors of dsub dims,
-    * each sub-space gets its own ksub-cell k-means codebook, and a vector
-    * compresses to m small codes (m=8 × ksub=16 → 8 nibbles ≈ 16× smaller
-    * than float32). Like [[ivfFit]] this is an INDEX BUILD, cached per
-    * corpus and amortized over every search.
-    *
-    * Encoding is fully relational: the corpus explodes to (vector, sub)
-    * sub-vectors, joins the broadcast codebook, and a min-struct aggregate
-    * picks the nearest cell — the ksub-way expansion is collapsed by
-    * map-side partial aggregation before any shuffle, and the (d2, code)
-    * struct-min makes nearest-cell ties deterministic. */
-  def pqFit(s: SparkSession, emb: DataFrame, m: Int = 8, ksub: Int = 16,
-            dim: Int = 64, seed: Long = 42L): PqIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val dsub = dim / m
-    GraftFunctions.register(s)
-    val books = (0 until m).flatMap { j =>
-      val sv = emb
-        .select(slice(col("embedding"), j * dsub + 1, dsub).as("subvec"))
-        .withColumn("fv", array_to_vector(col("subvec")))
-      val model = new KMeans().setK(ksub).setSeed(seed + j)
-        .setFeaturesCol("fv").setPredictionCol("code").setMaxIter(10)
-        .fit(sv)
-      model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (j, i, c.toArray.map(_.toFloat)) }
-    }
-    val codebooks = s.createDataFrame(books).toDF("sub", "code", "centroid")
-    val exploded = emb.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1})," +
-          s" j -> slice(embedding, j * $dsub + 1, $dsub))"))
-      .as(Seq("sub", "subvec")))
-    val codes = exploded.join(broadcast(codebooks), Seq("sub"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(subvec, centroid, (x, c) -> (x - c) * (x - c))," +
-          " CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE))"))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d2"), col("code"))).getField("code").as("code"))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(sub, code)))," +
-        " p -> p.code)").as("codes"))
-    PqIndex(codes.ckpt(eager = false), codebooks, m, dsub, ksub,
-      emb.count())
-  }
 
   /** Persist a fitted IVF index. The assignment table is written
     * PARTITIONED BY cell: an [[ivfSearch]] over the loaded index joins the
@@ -291,8 +217,7 @@ object SimSearch {
     * cast back to float. All m sub-spaces fit in ONE relational program
     * (the (sub) key rides every join/aggregate), so the plan is two
     * aggregates per round regardless of m, and every step is replayable
-    * verbatim in DuckDB — the llm_ann_pq twin. The spark.ml [[pqFit]]
-    * stays as the generic API (PqSpec, pqSave/pqLoad coverage). */
+    * verbatim in DuckDB — the llm_ann_pq twin. */
   def pqFitPortable(s: SparkSession, emb: DataFrame, m: Int = 8,
                     ksub: Int = 16, dim: Int = 64, rounds: Int = 3): PqIndex = {
     val dsub = dim / m
@@ -503,48 +428,19 @@ object SimSearch {
   /** Greedy MMR selection (Carbonell & Goldstein, SIGIR'98) over a
     * per-query candidate pool: pick 5 of the pool maximizing the
     * all-integer 7·r − 3·max-sim-to-selected (λ = 0.7 over floor-micro
-    * quantized scores). Pool columns: (qid, cid, cvec, r). Every stage
-    * after the pool is bounded by pool² rows per query; every argmax uses
-    * the composite key score·10⁸ − cid — no FP comparison anywhere.
-    * Shared by llm_mmr_rerank (brute-cosine pool) and llm_mmr_rerank_ann
-    * (IVF-probed pool — the corpus-scale pool stage, executed). */
-  private def mmrGreedySelect(pool0: DataFrame): DataFrame = {
-    val pool = pool0.ckpt(eager = false)
-    val pw = pool.select(col("qid"), col("cid").as("c1"),
-        col("cvec").as("v1"))
-      .join(pool.select(col("qid"), col("cid").as("c2"),
-        col("cvec").as("v2")), Seq("qid"))
-      .filter(col("c1") =!= col("c2"))
-      .withColumn("s", expr(
-        "CAST(floor(1e6 * cosine_similarity(v1, v2) + 0.5) AS BIGINT)"))
-      .select(col("qid"), col("c1"), col("c2"), col("s"))
-      .ckpt(eager = false)
-    val p = pool.select(col("qid"), col("cid"), col("r"))
-    var sel = p.groupBy(col("qid"))
-      .agg(expr("max_by(struct(cid, r), r * 100000000 - cid)").as("m"))
-      .select(col("qid"), col("m.cid").as("cid"), col("m.r").as("r"),
-        lit(1).as("pick"))
-    for (k <- 2 to 5) {
-      val cand = p.join(sel.select(col("qid"), col("cid")),
-        Seq("qid", "cid"), "left_anti")
-      val pen = pw
-        .join(sel.select(col("qid"), col("cid").as("c2")),
-          Seq("qid", "c2"))
-        .groupBy(col("qid"), col("c1").as("cid"))
-        .agg(max(col("s")).as("pen"))
-      val pick = cand.join(pen, Seq("qid", "cid"))
-        .withColumn("score", lit(7L) * col("r") - lit(3L) * col("pen"))
-        .groupBy(col("qid"))
-        .agg(expr("max_by(struct(cid, r), score * 100000000 - cid)")
-          .as("m"))
-        .select(col("qid"), col("m.cid").as("cid"), col("m.r").as("r"),
-          lit(k).as("pick"))
-      sel = sel.union(pick).ckpt(eager = false)
-    }
-    sel.select(col("qid"), col("pick"), col("cid"),
-        col("r").as("rel_micro"))
+    * quantized scores), every argmax on the composite key score·10⁸ − cid.
+    * Pool columns: (qid, cid, cvec, r). One aggregate gathers each query's
+    * pool (≤ 8 members) and the compiled `mmr_greedy` kernel
+    * ([[graft.functions.MmrGreedy]]) runs the whole greedy per query, so
+    * the greedy runs no Spark job while the query is built and the plan
+    * carries no pool² self-join. Shared by llm_mmr_rerank (brute-cosine pool) and
+    * llm_mmr_rerank_ann (IVF-probed pool — the corpus-scale pool stage,
+    * executed). */
+  private def mmrGreedySelect(pool: DataFrame): DataFrame =
+    pool.groupBy(col("qid"))
+      .agg(collect_list(struct(col("cid"), col("cvec"), col("r"))).as("p"))
+      .select(col("qid"), inline(call_function("mmr_greedy", col("p"))))
       .orderBy(col("qid"), col("pick"))
-  }
 
   val defs: Map[String, Q] = Map(
     // exact brute-force cosine top-5 per query vector
@@ -573,8 +469,8 @@ object SimSearch {
     // composite key score·10⁸ − cid (max score, then lowest cid) — no FP
     // comparison anywhere in the selection. Scale shape: the pool stage
     // is the broadcast-query brute-force (→ ANN index at corpus scale,
-    // like search); everything after is bounded by pool² = 64 rows per
-    // query. Twin: 4 unrolled greedy steps over the same integer scores.
+    // like search); everything after is one mmr_greedy call per query
+    // over ≤ 8 members. Twin: 4 unrolled greedy steps, same integer scores.
     "llm_mmr_rerank" -> ((s, d) => {
       GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")

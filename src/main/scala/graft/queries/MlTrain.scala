@@ -1876,7 +1876,7 @@ object MlTrain {
                generate_subscripts(embedding, 1) AS i
         FROM mino
       ), sims AS (
-        -- zero-norm guard mirrors the engine (CosineSimilarity.scala:46
+        -- zero-norm guard mirrors the engine (CosineSimilarity.cosine
         -- returns 0.0 when either norm is 0): an all-zero embedding
         -- passes len>0 but must score sim 0, not NULL/Inf (ADVICE r12)
         SELECT qa.vec_id AS src, qb.vec_id AS nbr,

@@ -132,4 +132,16 @@ class BoundedCollectSetSpec extends AnyFunSuite {
     assert(got(2).length == 10001 && got(2).toSet.subsetOf(
       (1L to 10001L).toSet), "over-cap group saturates at cap+1")
   }
+
+  test("a truncated serialized buffer fails loudly instead of zero-padding") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val agg = graft.functions.BoundedCollectSet(Literal(0L), 10)
+    val bytes = agg.serialize(Array(3L, 11L, 22L, 33L))
+    assert(agg.deserialize(bytes).toSeq == Seq(3L, 11L, 22L, 33L))
+    // count says 3 members, the payload holds 1: eval would fabricate two
+    val e = intercept[IllegalArgumentException] {
+      agg.deserialize(java.util.Arrays.copyOf(bytes, 16))
+    }
+    assert(e.getMessage.contains("corrupt serialized buffer"))
+  }
 }

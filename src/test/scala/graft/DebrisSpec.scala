@@ -80,4 +80,27 @@ class DebrisSpec extends AnyFunSuite {
     assert(frame.agg(sum($"s")).head().getLong(0) ==
       (1 to 4000).map(i => i.toLong * ((i % 20 + 1) * 100L)).sum)
   }
+
+  test("SessionCache queries survive build all → sweep → execute all") {
+    // a fresh corpus directory, so every SessionCache frame (the IVF
+    // index, the entity-resolution pairs and clusters) is built inside
+    // this test: all plans are BUILT first, a sweep runs, and only then
+    // is any plan executed. A lazily cut cached frame would lose the
+    // broadcasts its first read still needs.
+    val dir = java.nio.file.Files.createTempDirectory("graft-debris-order")
+    new java.io.File(TestSession.sf).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    val names = Seq("llm_mmr_rerank", "llm_mmr_rerank_ann",
+      "llm_mmr_rerank_ann_recall", "er_clusters", "er_survivorship")
+    val built = names.map(n => SparkEntry.queries(n)(spark, dir.toString))
+    Debris.sweep(spark)
+    // row order is not part of every query's contract: compare sorted
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val got = built.map(rows)
+    val want = names.map(n => rows(SparkEntry.queries(n)(spark, TestSession.sf)))
+    names.indices.foreach { i =>
+      assert(got(i) == want(i), s"${names(i)} changed under build → sweep → run")
+    }
+  }
 }

@@ -425,7 +425,7 @@ class PlanAuditSpec extends AnyFunSuite
       "agg_kendall_tau"       -> "50x11-cell contingency grid (value domains)",
       "ml_precision_at_k"     -> "<=20 query vectors",
       "llm_hard_negatives"    -> "<=20 query vectors + label predicate",
-      "llm_mmr_rerank"        -> "<=20 query vectors pool stage; greedy bounded by pool^2 = 64 rows/query",
+      "llm_mmr_rerank"        -> "<=20 query vectors pool stage; greedy is one kernel call per query (<=8 members)",
       "llm_mmr_rerank_ann"    -> "k-row centroid probe (IVF pool stage) + <=20 query vectors",
       "llm_mmr_rerank_ann_recall" -> "<=20-query MMR selections, both pool variants",
       "ml_smote_midpoints"    -> "minority-class self-pairing exactness anchor (corpus scale: IVF candidates — see PLANS.md)")

@@ -145,58 +145,27 @@ class Round11Spec extends AnyFunSuite {
     }
   }
 
-  test("llm_mmr_rerank matches a from-scratch greedy recompute") {
-    val got = SparkEntry.queries("llm_mmr_rerank")(spark, sf)
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    // rebuild the pool + pairwise sims driver-side and replay the greedy
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val emb = graft.core.Tables.t(spark, sf, "embeddings")
-    val q = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val pool = emb.select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      .join(broadcast(q), col("cid") =!= col("qid"))
-      .withColumn("r", expr(
-        "CAST(floor(1e6 * cosine_similarity(qv, cv) + 0.5) AS BIGINT)"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
-          .orderBy(col("r").desc, col("cid"))))
-      .filter(col("rn") <= 8)
-      .select(col("qid"), col("cid"), col("r"), col("cv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getSeq[Float](3).toArray))
-    def cosMicro(a: Array[Float], b: Array[Float]): Long = {
-      var dot = 0.0; var aa = 0.0; var bb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i).toDouble
-        aa += a(i).toDouble * a(i).toDouble
-        bb += b(i).toDouble * b(i).toDouble; i += 1
-      }
-      math.floor(1e6 * dot / math.sqrt(aa * bb) + 0.5).toLong
-    }
-    pool.groupBy(_._1).foreach { case (qid, members) =>
-      val byCid = members.map(m => m._2 -> (m._3, m._4)).toMap
-      var selected = Vector.empty[Long]
-      for (k <- 1 to 5) {
-        val cands = byCid.keys.filterNot(selected.contains).toSeq
-        val pickKey = cands.map { c =>
-          val r = byCid(c)._1
-          val score = if (k == 1) r
-            else 7L * r - 3L * selected.map(sc =>
-              cosMicro(byCid(c)._2, byCid(sc)._2)).max
-          c -> (score * 100000000L - c)
-        }
-        val pick = pickKey.maxBy(_._2)._1
-        assert(got((qid, k))._1 == pick,
-          s"q$qid pick$k: engine ${got((qid, k))._1} vs reference $pick")
-        selected :+= pick
-      }
-    }
-    // shape: 20 queries x 5 distinct picks
+  // the greedy runs as one compiled kernel; the driver-side replay over
+  // independently rebuilt pools is its oracle, for both pool variants
+  private def assertGreedy(query: String,
+                           pools: Map[Long, Seq[MmrReference.Member]]): Unit = {
+    val got = SparkEntry.queries(query)(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
+    val want = pools.toSeq.flatMap { case (q, pool) =>
+      MmrReference.greedy(pool).map { case (k, c, r) => (q, k, c, r) }
+    }.sortBy(x => (x._1, x._2))
+    assert(got == want, s"$query: engine ${got.diff(want).take(5)} vs " +
+      s"reference ${want.diff(got).take(5)}")
+    // shape: 20 queries x 5 distinct picks, ordered by (qid, pick)
     assert(got.size == 100)
+  }
+
+  test("llm_mmr_rerank matches a from-scratch greedy recompute") {
+    assertGreedy("llm_mmr_rerank", MmrReference.brutePools(spark, sf))
+  }
+
+  test("llm_mmr_rerank_ann matches a greedy recompute over the IVF pool") {
+    assertGreedy("llm_mmr_rerank_ann", MmrReference.ivfPools(spark, sf))
   }
 
   test("evt_uplift_qini: planted heterogeneous effect lands in the top decile") {
