@@ -1,43 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 object Bench {
-  private def benchWarehouse(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-wh")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }))
-    dir.toString
-  }
+  // System.gc fallback cadence; see maybeReclaim
+  private val GcEveryQueries = 50
+  private val GcEverySecs = 120.0
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // INT64-micros timestamps: INT96 (the compatibility default) has no
-      // usable parquet stats. The skipping demo below does NOT depend on
-      // this (it clusters on a DATE column precisely because NTZ timestamp
-      // predicates never reach parquet stats — see PlanAuditSpec's pinned
-      // test); the setting just gives LTZ timestamp columns real stats
-      // generally.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // fresh warehouse per run: the layout demo's saveAsTable would hit
-      // "location not empty" against a leftover spark-warehouse/ dir from
-      // a previous run (the in-memory catalog forgets tables across JVMs);
-      // deleted on exit so repeated runs don't fill the temp volume with
-      // bucketed table copies
-      .config("spark.sql.warehouse.dir", benchWarehouse())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.Role.Bench)
     // warm the session (codegen compiler, file-listing, shuffle machinery)
     // so the first timed query doesn't absorb one-time init cost
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -108,10 +78,7 @@ object Bench {
     def maybeReclaim(lastSecs: Double): Unit = {
       sinceGc += 1
       secsSinceGc += lastSecs
-      val (gcEvery, gcSecs) = (
-        sys.env.getOrElse("SPARK_GRAFT_GC_QUERIES", "50").toInt,
-        sys.env.getOrElse("SPARK_GRAFT_GC_SECS", "120").toDouble)
-      if (sinceGc >= gcEvery || secsSinceGc >= gcSecs) {
+      if (sinceGc >= GcEveryQueries || secsSinceGc >= GcEverySecs) {
         sinceGc = 0
         secsSinceGc = 0.0
         System.gc()

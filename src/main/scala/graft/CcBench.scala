@@ -1,7 +1,7 @@
 package graft
 import graft.core.Ckpt._
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, TextOps}
 
@@ -17,13 +17,7 @@ object CcBench {
   def main(args: Array[String]): Unit = {
     val sf = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 5
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.Role.CcBench)
     import spark.implicits._
 
     // real graph: the exact-Jaccard near-dup pairs + a synthetic LONG

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import graft.etl.Pipeline
 
 /** EP1 as a CLI (the engine's equivalent of
@@ -15,16 +15,7 @@ object Ingest {
   def main(args: Array[String]): Unit = {
     require(args.length == 3,
       "usage: graft.Ingest <tripsParquet> <zonesCsv> <warehouseDir>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.Role.Ingest)
     val conf = Pipeline.Conf(tripsSource = args(0), zonesSource = args(1),
       warehouse = args(2))
     val zones = Pipeline.refreshZones(spark, conf)

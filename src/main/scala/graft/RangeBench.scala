@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** DEV harness: point-in-interval join head-to-head (the CcBench
@@ -21,14 +22,7 @@ object RangeBench {
   def main(args: Array[String]): Unit = {
     val sf = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val runs = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.Role.RangeBench)
 
     def intervals(): DataFrame = graft.core.Tables.t(spark, sf, "events")
       .filter(col("event_type") === "signup")

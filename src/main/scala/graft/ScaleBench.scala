@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** DEV harness for the cross-SF scaling probe: times the iterative /
   * multi-pass query family at several scale factors in ONE warm JVM, so
@@ -24,14 +25,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val runs = if (args.length > 0) args(0).toInt else 3
     val queries = if (args.length > 1) args.drop(1).toSeq else defaultQueries
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.Role.ScaleBench)
     def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
     for (q <- queries; sf <- sfDirs) {
       val fn = SparkEntry.queries(q)

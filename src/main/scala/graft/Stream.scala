@@ -1,7 +1,7 @@
 package graft
 import graft.core.Ckpt._
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStreams
 
@@ -20,17 +20,7 @@ object Stream {
     require(args.nonEmpty, "usage: graft.Stream <eventsDir> [op]")
     val dir = args(0)
     val op = if (args.length > 1) args(1) else "tumbling"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.Role.Stream)
     // lazy: the `gate` mode takes an sf dir, not an events parquet dir
     lazy val src = EventStreams.readEventStream(spark, dir)
     import spark.implicits._

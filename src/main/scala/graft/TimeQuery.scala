@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Single-query timing harness: runs one registered query N times in one
   * JVM so steady-state cost separates from first-run codegen/JIT warmup
@@ -14,14 +14,7 @@ object TimeQuery {
     val name = args(0)
     val sf = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build(GraftSession.Role.TimeQuery)
     // SPARK_GRAFT_WARM=1: absorb the UNIVERSAL first-job runtime init
     // (codegen compiler, shuffle machinery, scan JIT — measured ~7 s on
     // run1 of even a trivial-plan query) with the same warmup Bench

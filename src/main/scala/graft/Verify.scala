@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,21 +16,7 @@ object Verify {
     val prefixes = sel.filter(_.endsWith("*")).map(_.dropRight(1))
     def selected(name: String): Boolean =
       sel.isEmpty || exact(name) || prefixes.exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Deliberately KEEP the INT96 default for the dumped result parquet:
-      // INT64-micros timestamps carry isAdjustedToUTC=true, which DuckDB
-      // surfaces as TIMESTAMP WITH TIME ZONE ("+00:00" suffix) — every
-      // timestamp-valued query then string-mismatches the oracle's naive
-      // TIMESTAMP. INT96 reads back naive on the DuckDB side and matches.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.Role.Verify)
     new java.io.File(outDir).mkdirs()
     // per-query (rows, wall-ms) for the manifest canary below
     val stats = scala.collection.mutable.TreeMap.empty[String, (Long, Long)]

@@ -1,12 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** Typed custom aggregates (SURVEY §2 "custom typed aggregate" / "UDF-UDAF
-  * surface"): registered through `udaf(Aggregator)` so they run as real
-  * partial+final aggregates (map-side combine, no collect).
+  * surface"): each is built as a `ScalaAggregator`, the expression
+  * `udaf(Aggregator)` builds, so they run as real partial+final aggregates
+  * (map-side combine, no collect).
   */
 object Aggregators {
 
@@ -205,14 +209,21 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("kahan_sum", udaf(KahanSum))
-    spark.udf.register("dec_hist", udaf(DecHistAgg))
-    spark.udf.register("minhash16", udaf(new MinHashAgg(16)))
+  /** name → aggregate builder, injected by [[graft.plans.GraftExtensions]]
+    * beside [[GraftFunctions.builders]]. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    builder("kahan_sum", KahanSum),
+    builder("dec_hist", DecHistAgg),
+    builder("minhash16", new MinHashAgg(16)),
     // 64 permutations: feeds r=2/b=32 banding in Dedup (r·b = 64), which
     // needs the longer signature to keep recall ≥ 0.95 at J = 0.3
-    spark.udf.register("minhash64", udaf(new MinHashAgg(64)))
-    spark.udf.register("simhash64", udaf(SimHashAgg))
-    spark.udf.register("topk3_by", udaf(new TopKAgg(3)))
-  }
+    builder("minhash64", new MinHashAgg(64)),
+    builder("simhash64", SimHashAgg),
+    builder("topk3_by", new TopKAgg(3)))
+
+  /** The expression `spark.udf.register(name, udaf(a))` would install. */
+  private def builder[IN: TypeTag, BUF, OUT](name: String, a: Aggregator[IN, BUF, OUT])
+      : (String, Seq[Expression] => Expression) =
+    name -> (es => ScalaAggregator(es, a, ExpressionEncoder[IN](),
+      encoderFor(a.bufferEncoder), aggregatorName = Some(name)))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -102,12 +101,11 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** SQL registration so queries can say `cosine_similarity(a, b)` /
+/** SQL names so queries can say `cosine_similarity(a, b)` /
   * `dot_product(a, b)` via `expr(...)` without touching Column internals.
-  * ONE builder list feeds both paths: [[register]] (temp functions on an
-  * existing session) and [[graft.plans.GraftExtensions]]' `injectFunction`
-  * (present from session build when `spark.sql.extensions` is set, no
-  * manual call needed). */
+  * [[graft.plans.GraftExtensions]] injects every builder at session build
+  * (`spark.sql.extensions`, set by [[graft.core.GraftSession]]); there is
+  * no other install path. */
 object GraftFunctions {
 
   /** name → expression builder, the single source of truth. */
@@ -153,11 +151,4 @@ object GraftFunctions {
     // integer literal — it is baked into the aggregate's saturation point)
     "bounded_collect_set" -> (es => BoundedCollectSet(es.head,
       es(1).eval().asInstanceOf[Number].intValue)))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
-    }
-  }
 }

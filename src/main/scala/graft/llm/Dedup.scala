@@ -6,14 +6,13 @@ import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
-import graft.functions.GraftFunctions
 
 /** Approximate dedup family for 100 TB corpora (BASELINE.json north_star).
   * Exact anchors (md5 group, exact n-gram Jaccard) live in [[TextOps]];
   * this file holds the scale paths:
   *
   *  - native banded MinHash (primary, [[minhashPairsNative]]): shingle
-  *    hashes → minhash64 UDAF signature → r=2/b=32 bucket join → exact
+  *    hashes → 64-column min-hash aggregate → r=2/b=32 bucket join → exact
   *    verification on candidates only, so cost is O(near-dup pairs), not
   *    O(n²). The `spark.ml.feature.MinHashLSH` variant ([[minhashPairs]])
   *    is kept as a cross-check.
@@ -54,8 +53,9 @@ object Dedup {
       .select("doc1", "doc2").distinct()
   }
 
-  /** Native banded MinHash near-dup pairs: shingles → xxhash64 → 64-perm
-    * signature via the [[graft.functions.Aggregators.MinHashAgg]] UDAF →
+  /** Native banded MinHash near-dup pairs: shingles → polynomial hash →
+    * 64-perm signature as one 64-column min aggregate (portable, so the
+    * DuckDB twin replays it) →
     * r=2/b=32 banding (see [[bandedCandidates]]: J=0.3 recall ≈ 0.96,
     * J=0.1 false-candidate rate ≈ 0.27 vs 0.81 for r=1) → exact Jaccard
     * verification restricted to candidate pairs only.
@@ -425,7 +425,6 @@ object Dedup {
   def embeddingNearDup(s: SparkSession, emb: DataFrame,
                        minCos: Double = 0.95,
                        nTables: Int = 8, bitsPerTable: Int = 8): DataFrame = {
-    GraftFunctions.register(s)
     // the bucket self-join carries ONLY (sig, id) — 16 bytes/row — through
     // the shuffle; embeddings (~dim×4 bytes each) are joined back by id
     // for just the deduped candidate pairs. The earlier form shuffled both
@@ -625,7 +624,6 @@ object Dedup {
     // DuckDB. Recall vs all-pairs is the sign-LSH collision rate — the
     // seeded random-hyperplane variant above remains the production path.
     "llm_embedding_neardup_exact" -> ((s, d) => {
-      GraftFunctions.register(s)
       val bucketed = spread(t(s, d, "embeddings"))
         .select(col("vec_id"), col("embedding"),
           (0 until 8).map(i =>

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
-import graft.functions.GraftFunctions
 
 /** Similarity search over `embeddings(vec_id, embedding: array<float>,
   * label)` (BASELINE.json north_star).
@@ -40,7 +39,6 @@ object SimSearch {
     */
   def signatures(df: DataFrame, nTables: Int = 24, bitsPerTable: Int = 4,
                  dim: Int = 64): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.withColumn("sigs", call_function("hyperplane_sigs",
       col("embedding"), lit(nTables), lit(bitsPerTable), lit(dim)))
   }
@@ -87,7 +85,6 @@ object SimSearch {
     * scale) the same recall needs far fewer probes. */
   def ivfSearch(index: IvfIndex, queryPred: Column,
                 nProbe: Int, topK: Int = 5): DataFrame = {
-    GraftFunctions.register(index.assigned.sparkSession)
     val queries = index.assigned.filter(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val qCells = queries.crossJoin(broadcast(index.centroids))
@@ -221,7 +218,6 @@ object SimSearch {
   def pqFitPortable(s: SparkSession, emb: DataFrame, m: Int = 8,
                     ksub: Int = 16, dim: Int = 64, rounds: Int = 3): PqIndex = {
     val dsub = dim / m
-    GraftFunctions.register(s)
     val sv = emb.select(col("vec_id"), posexplode(expr(
         s"transform(sequence(0, ${m - 1})," +
           s" j -> slice(embedding, j * $dsub + 1, $dsub))"))
@@ -280,7 +276,6 @@ object SimSearch {
     * That is the PQ trade: scan compressed codes, not vectors. */
   def pqSearch(index: PqIndex, corpus: DataFrame, queryPred: Column,
                topK: Int = 5, rerankFactor: Int = 0): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     require(rerankFactor >= 0,
       s"rerankFactor must be >= 0 (0 = auto pool); got $rerankFactor")
     val m = index.m; val dsub = index.dsub
@@ -348,7 +343,6 @@ object SimSearch {
     * constant re-rank pool recovers. */
   def ivfPqSearch(ivf: IvfIndex, pq: PqIndex, queryPred: Column,
                   nProbe: Int, topK: Int = 5, pool: Int = 0): DataFrame = {
-    GraftFunctions.register(ivf.assigned.sparkSession)
     val m = pq.m; val dsub = pq.dsub
     // default pool: 32·topK — CONSTANT in corpus size (the r8 fix). Sized
     // from the measured ADC ordering loss of the m=8/ksub=16 codebook on
@@ -445,7 +439,6 @@ object SimSearch {
   val defs: Map[String, Q] = Map(
     // exact brute-force cosine top-5 per query vector
     "llm_cosine_topk" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -472,7 +465,6 @@ object SimSearch {
     // like search); everything after is one mmr_greedy call per query
     // over ≤ 8 members. Twin: 4 unrolled greedy steps, same integer scores.
     "llm_mmr_rerank" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -496,7 +488,6 @@ object SimSearch {
     // pool. llm_mmr_rerank_ann_recall scores the selections against the
     // exact-pool ground truth (oracle-checked floor).
     "llm_mmr_rerank_ann" -> ((s, d) => {
-      GraftFunctions.register(s)
       val ivf = ivfIndexFor(s, d, k = 16)
       val queries = ivf.assigned.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -530,7 +521,6 @@ object SimSearch {
     // projected away before the top-k shuffle); at corpus scale the
     // candidate stage swaps to the ANN index exactly like search does.
     "llm_hard_negatives" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
@@ -553,7 +543,6 @@ object SimSearch {
     // retrieval pipeline reports. Same broadcast-query top-k shape as
     // llm_cosine_topk, rolled up to one exact ratio per query.
     "ml_precision_at_k" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
@@ -586,7 +575,6 @@ object SimSearch {
     // counted on the SAME per-query partition the rank window already
     // shuffles, so no extra pass. Scale shape = llm_cosine_topk.
     "ml_ndcg" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
@@ -628,7 +616,6 @@ object SimSearch {
     // selection trajectory is engine-exact; the 1-row argmin probes are
     // the bounded gdFit-style driver collects.
     "llm_coreset_kcenter" -> ((s, d) => {
-      GraftFunctions.register(s)
       import s.implicits._
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
@@ -653,7 +640,6 @@ object SimSearch {
 
     // k-NN label vote: majority label among top-10 exact neighbors
     "llm_knn_label" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -694,7 +680,6 @@ object SimSearch {
     // hash compare, not a rows-only count. Recall vs brute force is
     // additionally pinned by llm_ann_lsh_recall + ScalaTest.
     "llm_ann_lsh" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = signatures(spread(t(s, d, "embeddings")))
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
@@ -772,7 +757,6 @@ object SimSearch {
     // rows-only contract. Scale shape = llm_cosine_topk (queries
     // broadcast, facts stream, only (qid,cid,sim) crosses the shuffle).
     "llm_mrl_truncation" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -812,7 +796,6 @@ object SimSearch {
     // Scale shape = llm_cosine_topk: queries broadcast, facts stream,
     // only (qid, cid, sim) crosses the shuffle.
     "llm_rrf_fusion" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val queries = emb.filter(col("vec_id") < 20)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))

@@ -74,7 +74,6 @@ object Partitioning {
     * sort first (bucket -1), keeping NULL rows co-located, not dropped. */
   def clusterByZOrder(df: DataFrame, n: Int, colA: String, colB: String)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     // date/timestamp keys go through an epoch-number view first (DATE has
     // no direct double cast; NTZ reuses the session-UTC instant)
     def num(c: String): Column = df.schema(c).dataType match {
@@ -112,7 +111,6 @@ object Partitioning {
     * engines ship as HILBERT clustering. */
   def clusterByHilbert(df: DataFrame, n: Int, colA: String, colB: String)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     def num(c: String): Column = df.schema(c).dataType match {
       case org.apache.spark.sql.types.DateType => unix_date(col(c)).cast("double")
       case org.apache.spark.sql.types.TimestampNTZType =>

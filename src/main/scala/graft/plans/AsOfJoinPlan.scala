@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
@@ -26,8 +26,7 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   *    row), no window buffer, no per-key materialization;
   *  - [[GraftExtensions]]: the `SparkSessionExtensions` hook
   *    (`spark.sql.extensions=graft.plans.GraftExtensions`) that installs
-  *    rule + strategy at session build; [[AsOfNative.ensureRegistered]]
-  *    is the runtime fallback for sessions built without the config.
+  *    rule + strategy at session build — the only install point.
   *
   * Why a custom operator beats the composed form at 100 TB: the
   * union+window plan shuffles BOTH sides into one partition-wide sort and
@@ -222,16 +221,18 @@ case class AsOfJoinExec(
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` — installs the
-  * as-of strategy, the key-mirror optimizer rule, and every graft SQL
-  * function at session build (so `spark.sql("SELECT cosine_similarity…")`
-  * works with no registration call). */
+/** `spark.sql.extensions=graft.plans.GraftExtensions` — the engine's one
+  * install point: the as-of and range-join strategies, the key-mirror
+  * optimizer rule, every graft SQL function and UDAF, all at session
+  * build (so `spark.sql("SELECT cosine_similarity…")` works with no
+  * registration call). [[graft.core.GraftSession]] sets it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => RangeJoinStrategy)
     e.injectOptimizerRule(_ => AsOfJoinKeyPushdown)
-    graft.functions.GraftFunctions.builders.foreach { case (name, b) =>
+    (graft.functions.GraftFunctions.builders ++
+        graft.functions.Aggregators.builders).foreach { case (name, b) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
@@ -243,17 +244,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** Public construction API for the native operator. */
 object AsOfNative {
-
-  /** Runtime fallback for sessions built without
-    * `spark.sql.extensions=graft.plans.GraftExtensions` — idempotently
-    * installs the strategy + rule through the public experimental hooks. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val exp = s.experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-    if (!exp.extraOptimizations.contains(AsOfJoinKeyPushdown))
-      exp.extraOptimizations = exp.extraOptimizations :+ AsOfJoinKeyPushdown
-  }
 
   /** As-of join `left` to `right` on equi-keys + event time.
     *
@@ -269,7 +259,6 @@ object AsOfNative {
                      leftTs: String, rightTs: String,
                      forward: Boolean = false): DataFrame = {
     val s = left.sparkSession
-    ensureRegistered(s)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     require(lp.outputSet.intersect(rp.outputSet).isEmpty,

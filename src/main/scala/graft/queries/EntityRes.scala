@@ -4,7 +4,6 @@ import graft.core.Ckpt._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
-import graft.functions.GraftFunctions
 
 /** Entity resolution / record linkage (SURVEY.md §2 tier C extension —
   * the fuzzy-matching counterpart of the exact dedup family):
@@ -79,7 +78,6 @@ object EntityRes {
       matchPairsBuild(s, d).ckpt(eager = false))
 
   private def matchPairsBuild(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
     val r = records(s, d)
     val a = r.select(col("rid").as("rid_a"), col("name").as("name_a"),
       substring(col("name"), 1, 1).as("blk"))
@@ -110,7 +108,6 @@ object EntityRes {
     // boost vs no boost, transpositions, unequal lengths — is exercised
     // and hash-compared against DuckDB's implementation.
     "fn_jaro_winkler" -> ((s, d) => {
-      GraftFunctions.register(s)
       val names = t(s, d, "part").select(col("p_name")).distinct()
       val a = names.select(col("p_name").as("name_a"))
       val b = names.select(col("p_name").as("name_b"))

@@ -215,7 +215,6 @@ object Extended {
     // array per group: map-side partials stay tiny and the shuffle
     // carries sketches, never values.
     "agg_hdr_quantiles" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       t(s, d, "lineitem").groupBy(col("l_returnflag").as("g"))
         .agg(expr(
           "dec_hist(CAST(round(l_extendedprice * 100) AS BIGINT))").as("qs"))
@@ -224,7 +223,6 @@ object Extended {
     }),
 
     "agg_custom_udaf" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       t(s, d, "lineitem").groupBy(col("l_returnflag"))
         // round to cents, and the twin compares against the EXACT
         // integer-cents sum: Kahan stays within 2ε·Σ|x| (~2e-5 at sf1's

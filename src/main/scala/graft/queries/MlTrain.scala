@@ -1311,7 +1311,6 @@ object MlTrain {
     // the brute pairing here is the exactness anchor, same adjudication
     // as llm_cosine_topk.
     "ml_smote_midpoints" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings").filter(size(col("embedding")) > 0)
       val minoLab = emb.groupBy(col("label")).agg(count(lit(1)).as("n"))
         .orderBy(col("n"), col("label")).limit(1)

@@ -297,7 +297,6 @@ object Scalars {
     // DuckDB twin unrolls the identical 14-step rotate/reflect loop in
     // SQL, so hash parity differentially tests the kernel.
     "fn_hilbert" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       def axis(salt: String): Column =
         conv(substring(md5(concat(lit(salt),
           col("s_suppkey").cast("string"))), 1, 4), 16, 10)
@@ -318,7 +317,6 @@ object Scalars {
     // the SAME morton with an INDEPENDENT shift-mask spread — the oracle
     // is therefore also a differential test of the custom expression.
     "fn_geohash" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       def axis(salt: String): Column =
         conv(substring(md5(concat(lit(salt),
           col("s_suppkey").cast("string"))), 1, 4), 16, 10)

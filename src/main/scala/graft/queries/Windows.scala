@@ -239,7 +239,6 @@ object Windows {
     // heap does O(n log k) updates with no sort and no final
     // sort+window pass. Oracle: identical SQL to win_topk_per_group.
     "win_topk_agg" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       t(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(expr("topk3_by(o_totalprice, o_orderkey)").as("top"))

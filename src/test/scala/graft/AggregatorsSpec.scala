@@ -11,7 +11,6 @@ class AggregatorsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
   test("kahan_sum recovers small addends that naive double sum drops") {
-    Aggregators.register(spark)
     import spark.implicits._
     // 1e16 swallows 1.0 in plain double addition: naive sum of
     // [1e16, 1.0 ×1000, -1e16] loses most of the 1000
@@ -27,7 +26,6 @@ class AggregatorsSpec extends AnyFunSuite {
   }
 
   test("kahan_sum distributes: multi-partition merge equals single-partition") {
-    Aggregators.register(spark)
     import spark.implicits._
     val vals = (1 to 10000).map(i => i * 0.1)
     val one = vals.toDF("v").repartition(1)
@@ -40,7 +38,8 @@ class AggregatorsSpec extends AnyFunSuite {
   test("typed Aggregator via groupByKey (Dataset API, no SQL registration)") {
     import spark.implicits._
     // the same Aggregator used as a typed column over KeyValueGroupedDataset
-    // — the Dataset-native path next to the udaf() SQL registration
+    // — the Dataset-native path next to the SQL aggregate GraftExtensions
+    // injects
     val ds = Seq(("a", 1.5), ("a", 2.5), ("b", 4.0), ("b", 0.25)).toDS()
     val out = ds.groupByKey(_._1).mapValues(_._2)
       .agg(Aggregators.KahanSum.toColumn.name("total"))
@@ -49,7 +48,6 @@ class AggregatorsSpec extends AnyFunSuite {
   }
 
   test("simhash64 aggregate is value-identical to the explode formulation") {
-    Aggregators.register(spark)
     import spark.implicits._
     // real corpus tokens, multi-partition so partial/merge paths both run
     val toks = graft.core.Tables.spread(
@@ -81,7 +79,6 @@ class AggregatorsSpec extends AnyFunSuite {
   }
 
   test("topk3_by heap aggregate ≡ window row_number top-3") {
-    Aggregators.register(spark)
     // multi-partition input so the ≤k partial buffers really merge; ties
     // in the order value broken by the unique key, same as the window form
     val orders = graft.core.Tables.spread(
@@ -103,7 +100,6 @@ class AggregatorsSpec extends AnyFunSuite {
   }
 
   test("topk3_by runs as a partial+final aggregate (map-side combine)") {
-    Aggregators.register(spark)
     val df = graft.core.Tables.t(spark, TestSession.sf, "orders")
       .groupBy(col("o_custkey"))
       .agg(expr("topk3_by(o_totalprice, o_orderkey)").as("top"))
@@ -119,7 +115,6 @@ class AggregatorsSpec extends AnyFunSuite {
   }
 
   test("minhash16 signature agreement estimates Jaccard") {
-    Aggregators.register(spark)
     import spark.implicits._
     // two sets with known overlap: |A∩B| / |A∪B| = 50/150 = 1/3
     val a = (1 to 100).map(i => ("a", i.toLong))

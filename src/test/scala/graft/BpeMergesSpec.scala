@@ -20,7 +20,6 @@ class BpeMergesSpec extends AnyFunSuite {
         .otherwise(concat(acc, array(x))))
 
   test("bpe_apply_merges ≡ the chained HOF fold on crafted words") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rules = Seq(("a", "a"), ("aa", "a"), ("b", "c"), ("aa", "bc"))
     val words = Seq("aaa", "aaaa", "aaaaa", "abc", "aabc", "aaabc",
@@ -37,7 +36,6 @@ class BpeMergesSpec extends AnyFunSuite {
   }
 
   test("bpe_apply_merges ≡ the chained HOF fold over the fixture vocabulary") {
-    graft.functions.GraftFunctions.register(spark)
     val merges = graft.llm.TextOps.bpeMergesFor(spark, TestSession.sf)
     assert(merges.nonEmpty)
     val words = graft.core.Tables.t(spark, TestSession.sf, "documents")

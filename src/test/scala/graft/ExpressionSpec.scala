@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
-import graft.functions.GraftFunctions
 
 /** Differential test for the custom Catalyst expressions (SURVEY.md §7.3):
   * the codegen'd kernel must agree with the higher-order-function
@@ -20,7 +19,6 @@ class ExpressionSpec extends AnyFunSuite {
             CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))""")
 
   test("cosine_similarity matches HOF formulation on real embeddings") {
-    GraftFunctions.register(spark)
     val emb = t(spark, TestSession.sf, "embeddings")
     val pairs = emb.select(col("vec_id").as("ida"), col("embedding").as("a"))
       .crossJoin(broadcast(
@@ -34,7 +32,6 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("nulls propagate; zero vectors yield 0.0; dot_product works") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Array(1.0f, 0.0f)), Some(Array(1.0f, 0.0f))),
@@ -56,7 +53,6 @@ class ExpressionSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, FloatType}
     import spark.implicits._
-    GraftFunctions.register(spark)
     val a = Array(0.3f, -1.2f, 2.5f, 0.0f)
     val b = Array(1.0f, 0.5f, -0.25f, 4.5f)
     def litOf(xs: Array[Float]) = Literal.create(xs, ArrayType(FloatType))
@@ -73,7 +69,6 @@ class ExpressionSpec extends AnyFunSuite {
   test("hyperplane_sigs fused kernel ≡ composed dot_product formulation") {
     // the fused expression replaced a 96-node dot_product/when tree; the
     // signatures must be BIT-IDENTICAL or every LSH bucket assignment moves
-    GraftFunctions.register(spark)
     val nTables = 24; val bits = 4; val dim = 64
     val emb = t(spark, TestSession.sf, "embeddings").limit(200)
     val composed = (0 until nTables).map { tt =>
@@ -117,9 +112,8 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("extension-injected functions resolve in a fresh session without register()") {
-    // newSession() rebuilds session state from spark.sql.extensions alone —
-    // temp functions registered elsewhere in the suite don't carry over, so
-    // resolution here proves the injectFunction path, not a leftover
+    // newSession() rebuilds session state from spark.sql.extensions alone,
+    // so resolution here proves the injectFunction path
     val fresh = spark.newSession()
     val sim = fresh.sql(
       "SELECT cosine_similarity(array(3.0F, 4.0F), array(3.0F, 4.0F))")
@@ -127,5 +121,24 @@ class ExpressionSpec extends AnyFunSuite {
     assert(math.abs(sim - 1.0) < 1e-9)
     val sh = fresh.sql("SELECT word_shingles('a b c d', 3)")
     assert(sh.count() == 2)
+    // the six UDAFs are injected by the same extension
+    val a = fresh.sql("""SELECT kahan_sum(CAST(x AS DOUBLE)), dec_hist(x),
+        minhash16(x), minhash64(x), simhash64(x),
+        topk3_by(CAST(x AS DOUBLE), x)
+      FROM VALUES (1L), (2L), (3L), (4L) AS t(x)""").collect()(0)
+    def minhash(k: Int): Seq[Long] = {
+      val m = new graft.functions.Aggregators.MinHashAgg(k)
+      m.finish(Seq(1L, 2L, 3L, 4L).foldLeft(m.zero)(m.reduce))
+    }
+    assert(a.getDouble(0) == 10.0)
+    assert(a.getSeq[Long](1) == Seq(4L, 2L, 4L, 4L))
+    assert(a.getSeq[Long](2) == minhash(16))
+    assert(a.getSeq[Long](3) == minhash(64))
+    // bits 0 and 1 tie at zero votes over 1..4 (set); every higher bit loses
+    assert(a.getLong(4) == 3L)
+    assert(a.getSeq[org.apache.spark.sql.Row](5).map(_.getLong(1)) == Seq(4L, 3L, 2L))
+    // and so is the native as-of strategy
+    val asof = graft.queries.EventsBatch.defs("join_asof_native")(fresh, TestSession.sf)
+    assert(asof.queryExecution.sparkPlan.exists(_.isInstanceOf[graft.plans.AsOfJoinExec]))
   }
 }

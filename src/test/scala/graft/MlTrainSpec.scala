@@ -48,7 +48,6 @@ class MlTrainSpec extends AnyFunSuite {
   }
 
   test("jaro_winkler codegen agrees with interpreted eval") {
-    graft.functions.GraftFunctions.register(spark)
     val df = spark.read.parquet(s"$sf/part.parquet")
       .select(col("p_name").as("a"), reverse(col("p_name")).as("b"))
       .limit(200)

@@ -86,7 +86,6 @@ class MmrGreedySpec extends AnyFunSuite {
   }
 
   test("mmr_greedy rejects a pool struct of the wrong shape") {
-    graft.functions.GraftFunctions.register(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT mmr_greedy(array(struct(1L AS cid, 2L AS r)))").collect()
     }

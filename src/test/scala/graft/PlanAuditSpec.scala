@@ -322,7 +322,6 @@ class PlanAuditSpec extends AnyFunSuite
     assert(ZOrderBits.interleave16(0xFFFF, 0xFFFF) == 0xFFFFFFFFL)
     // masking: only the low 16 bits participate
     assert(ZOrderBits.interleave16(0x1FFFF, 0) == 0x55555555L)
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.range(1000)
       .selectExpr("cast(id % 97 as int) a", "cast(id % 89 as int) b")
       .selectExpr("a", "b", "interleave_bits(a, b) z")

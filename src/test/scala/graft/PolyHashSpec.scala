@@ -18,7 +18,6 @@ class PolyHashSpec extends AnyFunSuite {
       "CAST(7 AS BIGINT), (acc, x) -> pmod(acc * 31 + x, 1000000007))"
 
   test("poly_hash ≡ the HOF fold on ASCII, unicode, surrogate and empty input") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val probes = Seq("", "a", "abc", "hello world", "héllo", "世界",
       "a😀b", "x y z", "NATION_7 builds parts", " leading",
@@ -33,7 +32,6 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("poly_hash ≡ the HOF fold over real fixture text and shingles") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.core.Tables.t(spark, TestSession.sf, "documents")
     val mismTok = docs
       .select(explode(split(col("text"), " ")).as("s"))

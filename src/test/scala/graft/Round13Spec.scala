@@ -104,7 +104,6 @@ class Round13Spec extends AnyFunSuite {
 
   test("sf1: llm_coreset_kcenter greedy trajectory verifies at 10x") {
     assume(haveSf1)
-    graft.functions.GraftFunctions.register(spark)
     val sel = q("llm_coreset_kcenter", sf1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
